@@ -2,15 +2,19 @@
 
 Single logical DAG (SURVEY.md §3.4), all vectorized:
 
-  read corpus -> sha256 invariant check -> deterministic doc_id assignment
-  -> tokenizer mapInArrow kernel emitting FLAT (doc_id, term, tf) rows
-  -> doc_meta + global stats + GLOBAL per-term df/cf
-  -> salted shuffle: groupBy(shard, term_bucket, salt) -> bucket encode
-     kernel (delta + varint + block-max metadata, functions/codec.py)
+  read corpus -> deterministic doc_id assignment
+  -> doc_meta scan: metadata + sha256 invariant + doc_len in one projection
+  -> global doc stats (num_docs, avgdl) from the written doc_meta
+  -> pack kernel (mapInArrow): tokenize, key every (doc, term) pair by
+     (shard, term_bucket, salt) and emit ONE packed row per group per
+     input batch
+  -> packed shuffle: groupBy(shard, term_bucket, salt) -> unpack + encode
+     kernel (delta + varint/pfor + block-max metadata, functions/codec.py)
   -> shard shuffle + (shard, term, salt) sort -> inline salted-run merge
-     in the SAME task -> write postings (partitioned by shard), norms,
-     manifest, metrics.  ONE streaming pass from encode to parquet: no
-     persist of the encoded relation, no second read, no hot-term shuffle.
+     in the SAME task -> write postings (partitioned by shard), then
+     term_stats, norms, manifest, metrics.  ONE streaming pass from
+     tokenize to parquet: no pairs cache, no persist of the encoded
+     relation, no second read, no hot-term shuffle.
 
 Scale + performance notes (the part that matters at 10^12 docs):
 * doc_id = global rank under (repo, path, commit): ONE range shuffle +
@@ -18,17 +22,18 @@ Scale + performance notes (the part that matters at 10^12 docs):
   per-partition offset table.  Rank is independent of partition boundaries,
   so resume/rerun reassigns identical ids; no global window, no second
   exchange.
-* The tokenizer emits flat columns (one row per (doc, distinct term)), never
-  nested array<struct> — Arrow-friendly, and ~50x fewer rows than exploding
-  raw tokens (tf is counted inside the kernel, A8).
+* The pack kernel counts tf inside the kernel (A8) and ships each group's
+  pairs as flat binary buffers — the shuffle moves ~10^5 fat rows instead
+  of one row per (doc, term) pair, and Python crosses the JVM boundary
+  once per group.
 * The encode kernel processes a whole (shard, term_bucket, salt) group and
   encodes each term with NumPy inside — thousands of terms per group
-  amortize the per-group Arrow/pandas overhead that a per-term grouping
-  would pay 10^8 times at scale.  term_buckets caps group memory.
+  amortize the per-group Arrow overhead that a per-term grouping would pay
+  10^8 times at scale.  term_buckets caps group memory.
 * Hot terms ('def', 'the', ...; reference-domain analogues 'patient',
-  'trial') are salted into contiguous doc_id sub-ranges before the encode
-  shuffle; only salted runs go through the merge kernel, everything else
-  bypasses it.  Salted == unsalted output byte-identically (property-tested).
+  'trial') are salted into contiguous doc_id sub-ranges inside the pack
+  kernel; the write-pass merge kernel reconciles the runs.  Salted ==
+  unsalted output byte-identically (tested).
 * Per-term df/cf are EXACT GLOBAL sums of the encode kernels' partial counts,
   stored in the term_stats dictionary (never per-shard — per-shard stats
   would silently change BM25, SURVEY.md §2.8-B5; the reference's single
@@ -38,8 +43,8 @@ Scale + performance notes (the part that matters at 10^12 docs):
   group directory overwritten atomically (idempotent).  Reference analogue:
   page_token checkpoint (backend/db/scrape_clinical_trials.py:483-543).
 * persist_input: local corpora (and benchmarks) persist the ASSIGNED join
-  (corpus + doc_id) because it is consumed by 2 content passes (tokenize,
-  doc_meta/sha); the raw corpus itself is never persisted — the assign key
+  (corpus + doc_id) because it is consumed by 2 content passes (doc_meta/
+  sha, tokenize); the raw corpus itself is never persisted — the assign key
   scan stays column-pruned and content is cached exactly once.  On a real
   cluster reading Iceberg, leave False and let the scans re-read.
 """
@@ -47,7 +52,6 @@ Scale + performance notes (the part that matters at 10^12 docs):
 from __future__ import annotations
 
 import contextlib
-import itertools
 import math
 import time
 
@@ -57,10 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from clinical_trial_searchengine_spark.functions.analysis import (
-    analyze_batch,
-    analyze_flat,
-)
+from clinical_trial_searchengine_spark.functions.analysis import analyze_batch
 from clinical_trial_searchengine_spark.functions.codec import (
     encode_postings,
     encode_postings_group,
@@ -237,208 +238,11 @@ def _make_doc_len_col(mode: str):
     return _dl(F.col("content"))
 
 
-def make_tokenize_pairs_kernel(mode: str, emit_doc_len: bool = False):
-    """mapInPandas kernel: (doc_id, content) batches -> flat
-    (doc_id, term, tf) rows, tf counted in-kernel, terms sorted per doc.
-
-    With ``emit_doc_len`` each doc additionally yields ONE sentinel row
-    ``(doc_id, term=NULL, tf=doc_len)`` — doc lengths then ride out of the
-    single tokenize pass for free instead of needing a groupBy(doc_id)
-    shuffle over every (doc, term) pair (A7/A8, SURVEY.md §2.4)."""
-
-    def kernel(batches):
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            row_idx, terms, tfs, lens = analyze_flat(pdf["content"], mode)
-            out = pd.DataFrame(
-                {
-                    "doc_id": doc_ids[row_idx],
-                    "term": terms,
-                    "tf": tfs.astype(np.int32),
-                }
-            )
-            if emit_doc_len:
-                sentinels = pd.DataFrame(
-                    {
-                        "doc_id": doc_ids,
-                        "term": pd.array([None] * len(doc_ids), dtype=object),
-                        "tf": lens.astype(np.int32),
-                    }
-                )
-                out = pd.concat([out, sentinels], ignore_index=True)
-            yield out
-
-    return kernel
-
-
-def make_tokenize_pairs_kernel_arrow(mode: str, emit_doc_len: bool = False):
-    """mapInArrow twin of :func:`make_tokenize_pairs_kernel` — the default
-    build tokenize path.
-
-    Runs :func:`analyze_flat_arrow` straight on the Arrow batch: byte-LUT /
-    Arrow-kernel tokenize + dictionary encode, no pandas Series, no
-    per-token Python string.  Output rows are identical (property-tested via
-    analyze_flat_arrow == analyze_flat); measured 2.1-2.4x faster per
-    thread and — the scaling-efficiency point — allocation-free per token,
-    so 32 workers sharing one socket stop fighting the allocator and the
-    memory bus for PyObject traffic."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from clinical_trial_searchengine_spark.functions.analysis import (
-        analyze_flat_arrow,
-    )
-
-    def kernel(batches):
-        for batch in batches:
-            names = batch.schema.names
-            doc_ids = (
-                batch.column(names.index("doc_id"))
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            row_idx, dict_idx, dictionary, tfs, lens = analyze_flat_arrow(
-                batch.column(names.index("content")), mode
-            )
-            out_doc = pa.array(doc_ids[row_idx], type=pa.int64())
-            out_term = pc.take(dictionary, pa.array(dict_idx, type=pa.int64()))
-            out_tf = pa.array(tfs.astype(np.int32), type=pa.int32())
-            if emit_doc_len:
-                out_doc = pa.concat_arrays(
-                    [out_doc, pa.array(doc_ids, type=pa.int64())]
-                )
-                out_term = pa.concat_arrays(
-                    [out_term, pa.nulls(len(doc_ids), type=pa.string())]
-                )
-                out_tf = pa.concat_arrays(
-                    [out_tf, pa.array(lens.astype(np.int32), type=pa.int32())]
-                )
-            yield pa.RecordBatch.from_arrays(
-                [out_doc, out_term, out_tf], names=["doc_id", "term", "tf"]
-            )
-
-    return kernel
-
-
-def _encode_bucket_group(pdf: pd.DataFrame,
-                         codec: str = "varint") -> pd.DataFrame:
-    """Encode every term inside one (shard, term_bucket, salt) group.
-
-    Sort once by (term, doc_id), then slice per term — NumPy throughout.
-    Terms are factorized to int codes first: lexsort on two int arrays is
-    several times cheaper (and far lighter on memory bandwidth) than a
-    pandas string sort, which matters when many workers share one socket."""
-    shard = int(pdf["shard"].iloc[0])
-    salt = int(pdf["salt"].iloc[0])
-    codes, uniques = pd.factorize(pdf["term"], sort=True)
-    order = np.lexsort((pdf["doc_id"].to_numpy(), codes))
-    codes = codes[order]
-    terms = uniques.to_numpy()
-    doc_ids = pdf["doc_id"].to_numpy(dtype=np.uint64)[order]
-    tfs = pdf["tf"].to_numpy(dtype=np.uint64)[order]
-    # term boundaries on the sorted code column
-    change = np.flatnonzero(np.concatenate(([True], codes[1:] != codes[:-1])))
-    bounds = np.concatenate((change, [len(codes)]))
-    # whole-group batch encode: one varint pass over every term's postings
-    # (byte-identical to per-term encode_postings — property-tested in
-    # tests/test_codec.py; measured 6x faster than the per-term loop, which
-    # pays small-array numpy overhead once per term)
-    out_post, out_nb = encode_postings_group(doc_ids, tfs, bounds,
-                                             codec=codec)
-    return pd.DataFrame(
-        {
-            "shard": np.full(len(change), shard, dtype=np.int32),
-            "term": terms[codes[change]],
-            "salt": np.full(len(change), salt, dtype=np.int32),
-            "n_postings": np.diff(bounds),
-            "cf_local": np.add.reduceat(tfs, change).astype(np.int64),
-            "n_blocks": out_nb.astype(np.int32),
-            "postings": list(out_post),
-        }
-    )
-
-
-def _encode_term_arrays(shard, salt, term_array, doc_ids, tfs,
-                        codec: str = "varint"):
-    """Shared encode body: one group's (term StringArray, doc_ids uint64,
-    tfs uint64) -> encoded per-term rows (term-ascending), the single
-    source of truth for both the pair-row encode path and the packed
-    shuffle path (byte identity between them is by construction)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    denc = pc.dictionary_encode(term_array)
-    codes = denc.indices.to_numpy().astype(np.int64)
-    dic = denc.dictionary
-    # rank codes under lexicographic term order == factorize(sort=True)
-    sorter = pc.array_sort_indices(dic).to_numpy().astype(np.int64)
-    rank = np.empty(len(dic), dtype=np.int64)
-    rank[sorter] = np.arange(len(dic))
-    ranked = rank[codes]
-    order = np.lexsort((doc_ids, ranked))
-    ranked, doc_ids, tfs = ranked[order], doc_ids[order], tfs[order]
-    change = np.flatnonzero(
-        np.concatenate(([True], ranked[1:] != ranked[:-1]))
-    )
-    bounds = np.concatenate((change, [len(ranked)]))
-    out_post, out_nb = encode_postings_group(doc_ids, tfs, bounds,
-                                             codec=codec)
-    n_out = len(change)
-    return pa.table(
-        {
-            "shard": pa.array(np.full(n_out, shard, np.int32), pa.int32()),
-            "term": pc.take(dic, pa.array(sorter[ranked[change]])),
-            "salt": pa.array(np.full(n_out, salt, np.int32), pa.int32()),
-            "n_postings": pa.array(np.diff(bounds), pa.int64()),
-            "cf_local": pa.array(
-                np.add.reduceat(tfs, change).astype(np.int64), pa.int64()
-            ),
-            "n_blocks": pa.array(out_nb.astype(np.int32), pa.int32()),
-            "postings": pa.array(list(out_post), type=pa.binary()),
-        }
-    )
-
-
-def _encode_bucket_group_arrow(table, codec: str = "varint"):
-    """applyInArrow twin of :func:`_encode_bucket_group` — the pair-row
-    encode path (non-fused builds).  Same output rows in the same
-    (term-ascending) order, property-tested; the win is that the group's
-    term column never becomes a pandas object array (one PyObject per
-    (doc, term) pair), it stays an Arrow buffer dictionary-encoded in
-    C++.  Like the Arrow tokenizer this removes per-row allocator/
-    memory-bus traffic, which is what limits multi-executor build scaling
-    on one socket."""
-    shard = table.column("shard")[0].as_py()
-    salt = table.column("salt")[0].as_py()
-    doc_ids = (
-        table.column("doc_id").combine_chunks()
-        .to_numpy(zero_copy_only=False).astype(np.uint64)
-    )
-    tfs = (
-        table.column("tf").combine_chunks()
-        .to_numpy(zero_copy_only=False).astype(np.uint64)
-    )
-    return _encode_term_arrays(
-        shard, salt, table.column("term").combine_chunks(), doc_ids, tfs,
-        codec,
-    )
-
-
-def _make_encode_bucket_group_arrow(codec: str = "varint"):
-    """Closure wrapper for applyInArrow (which introspects the callable, so
-    a functools.partial won't do)."""
-
-    def _encode(table):
-        return _encode_bucket_group_arrow(table, codec)
-
-    return _encode
-
-
 # ---------------------------------------------------------------------------
-# packed encode shuffle (fused standard builds)
+# packed encode shuffle
 # ---------------------------------------------------------------------------
 
-# One row per (map task, shard, term_bucket, salt): all of that group's
+# One row per (input batch, shard, term_bucket, salt): all of that group's
 # pairs as four flat binary columns.  The encode exchange then moves
 # ~10^5 fat rows instead of one row per (doc, term) pair — same bytes,
 # ~500x fewer rows — which removes the per-row UnsafeRow serialize/
@@ -453,8 +257,6 @@ _PACK_SCHEMA = (
 
 def _string_array_parts(arr):
     """(data uint8[], starts int64[], lens int64[]) of a utf8 pa.Array."""
-    import pyarrow as pa  # noqa: F401
-
     arr = arr.combine_chunks() if hasattr(arr, "combine_chunks") else arr
     bufs = arr.buffers()
     offs = np.frombuffer(bufs[1], dtype=np.int32)[
@@ -470,29 +272,32 @@ def make_tokenize_pack_kernel_arrow(
 ):
     """mapInArrow kernel: (doc_id, content) batches -> packed group rows.
 
-    Tokenizes like :func:`make_tokenize_pairs_kernel_arrow`, then — instead
-    of emitting one row per (doc, term) pair into the exchange — assigns
-    each pair its (shard, term_bucket, salt) key IN the kernel (bucket =
-    crc32(term) % buckets via the vectorized dictionary hash) and packs
-    each group's pairs into one row of flat buffers.  Term strings stay
-    Arrow buffers end to end (per-pair materialization is a C++
+    Tokenizes each Arrow batch with :func:`analyze_flat_arrow`, assigns
+    each (doc, term) pair its (shard, term_bucket, salt) key IN the kernel
+    (bucket = crc32(term) % buckets via the vectorized dictionary hash) and
+    packs each group's pairs into one row of flat buffers.  Term strings
+    stay Arrow buffers end to end (per-pair materialization is a C++
     ``pc.take`` + slice).
+
+    ONE packed RecordBatch is yielded per input batch, so worker memory is
+    bounded by the batch size (``spark.sql.execution.arrow.
+    maxRecordsPerBatch``), not by the partition.  A group may therefore
+    arrive as several packed rows (one per batch); the unpack-encode
+    kernel concatenates and re-sorts them, so the encoded bytes do not
+    depend on the batch split.
 
     Hot-term salting is decided PER BATCH from local density: est_df =
     batch term count x (n_docs / batch docs); n_salts = clamp(ceil(est /
-    hot_df_threshold), 1, max_salts); salt = the same int64-product /
-    float64-divide / truncate expression as the driver plan.  This
-    replaces the driver's sampled salt-plan pre-pass (a whole extra
-    tokenize job per build) — it CAN disagree across batches for
-    borderline terms, which is free: salting only decides grouping, and
-    the write-pass merge kernel already reconciles ARBITRARY runs of a
-    (shard, term) into byte-identical postings (argsort by unique
-    doc_ids — the same property that makes salted == unsalted).
+    hot_df_threshold), 1, max_salts); salt = floor(local_doc_id x n_salts /
+    shard_size).  It CAN disagree across batches for borderline terms,
+    which is free: salting only decides grouping, and the write-pass merge
+    kernel reconciles ARBITRARY runs of a (shard, term) into byte-identical
+    postings (argsort by unique doc_ids — the same property that makes
+    salted == unsalted).
 
-    The bucket function differs from the pair-row path's xxhash64 — it
-    only decides GROUPING, never bytes: every pair of a term keeps one
-    bucket, the write pass re-buckets encoded rows with the JVM hash as
-    before.
+    The bucket only decides GROUPING, never bytes: every pair of a term
+    keeps one bucket, and the write pass re-buckets encoded rows with the
+    JVM xxhash64.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -505,9 +310,6 @@ def make_tokenize_pack_kernel_arrow(
     )
 
     def kernel(batches):
-        term_parts = []
-        did_parts, tf_parts = [], []
-        shard_parts, bucket_parts, salt_parts = [], [], []
         for batch in batches:
             names = batch.schema.names
             doc_ids = (
@@ -520,7 +322,6 @@ def make_tokenize_pack_kernel_arrow(
             )
             if len(dict_idx) == 0:
                 continue
-            dict_idx = np.asarray(dict_idx, dtype=np.int64)
             # per-TERM bucket + n_salts, computed once per batch vocab
             data, starts, lens = _string_array_parts(dictionary)
             b_term = (
@@ -541,71 +342,44 @@ def make_tokenize_pack_kernel_arrow(
                     np.ceil(est[hot] / hot_df_threshold).astype(np.int64),
                 )
             dids = doc_ids[row_idx]
-            local = dids % shard_size
-            ns = ns_term[dict_idx]
-            term_parts.append(
-                pc.take(dictionary, pa.array(dict_idx, type=pa.int64()))
+            tfs = np.asarray(tfs, dtype=np.int32)
+            shards = (dids // shard_size).astype(np.int32)
+            buckets = b_term[dict_idx]
+            salts = (
+                ((dids % shard_size) * ns_term[dict_idx]).astype(np.float64)
+                / shard_size
+            ).astype(np.int32)
+            order = np.lexsort((salts, buckets, shards))
+            terms = pc.take(dictionary, pa.array(dict_idx[order]))
+            dids, tfs = dids[order], tfs[order]
+            shards, buckets = shards[order], buckets[order]
+            salts = salts[order]
+            key = (
+                shards.astype(np.int64) << 40
+            ) | (buckets.astype(np.int64) << 20) | salts.astype(np.int64)
+            change = np.flatnonzero(
+                np.concatenate(([True], key[1:] != key[:-1]))
             )
-            did_parts.append(dids)
-            tf_parts.append(np.asarray(tfs, dtype=np.int32))
-            shard_parts.append((dids // shard_size).astype(np.int32))
-            bucket_parts.append(b_term[dict_idx])
-            salt_parts.append(
-                ((local * ns).astype(np.float64) / shard_size).astype(
-                    np.int32
-                )
+            bounds = np.append(change, len(key))
+            t_data, t_starts, t_lens = _string_array_parts(terms)
+            term_lens, term_data, doc_bufs, tf_bufs = [], [], [], []
+            for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
+                term_lens.append(t_lens[s:e].astype(np.int32).tobytes())
+                b1 = int(t_starts[e - 1] + t_lens[e - 1])
+                term_data.append(t_data[int(t_starts[s]):b1].tobytes())
+                doc_bufs.append(dids[s:e].tobytes())
+                tf_bufs.append(tfs[s:e].tobytes())
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "shard": pa.array(shards[change], pa.int32()),
+                    "bucket": pa.array(buckets[change], pa.int32()),
+                    "salt": pa.array(salts[change], pa.int32()),
+                    "term_lens": pa.array(term_lens, pa.binary()),
+                    "term_data": pa.array(term_data, pa.binary()),
+                    "doc_ids": pa.array(doc_bufs, pa.binary()),
+                    "tfs": pa.array(tf_bufs, pa.binary()),
+                }
             )
-        if not did_parts:
-            return
-        terms = pa.concat_arrays(
-            [t.combine_chunks() if hasattr(t, "combine_chunks") else t
-             for t in term_parts]
-        )
-        dids = np.concatenate(did_parts)
-        tfs = np.concatenate(tf_parts)
-        shards = np.concatenate(shard_parts)
-        buckets = np.concatenate(bucket_parts)
-        salts = np.concatenate(salt_parts)
-        order = np.lexsort((salts, buckets, shards))
-        terms = pc.take(terms, pa.array(order))
-        dids, tfs = dids[order], tfs[order]
-        shards, buckets, salts = shards[order], buckets[order], salts[order]
-        key = (
-            shards.astype(np.int64) << 40
-        ) | (buckets.astype(np.int64) << 20) | salts.astype(np.int64)
-        change = np.flatnonzero(
-            np.concatenate(([True], key[1:] != key[:-1]))
-        )
-        bounds = np.append(change, len(key))
-        t_data, t_starts, t_lens = _string_array_parts(terms)
-        rows = {
-            "shard": [], "bucket": [], "salt": [], "term_lens": [],
-            "term_data": [], "doc_ids": [], "tfs": [],
-        }
-        for gi in range(len(change)):
-            s, e = int(bounds[gi]), int(bounds[gi + 1])
-            rows["shard"].append(int(shards[s]))
-            rows["bucket"].append(int(buckets[s]))
-            rows["salt"].append(int(salts[s]))
-            rows["term_lens"].append(
-                t_lens[s:e].astype(np.int32).tobytes()
-            )
-            b0 = int(t_starts[s])
-            b1 = int(t_starts[e - 1] + t_lens[e - 1]) if e > s else b0
-            rows["term_data"].append(t_data[b0:b1].tobytes())
-            rows["doc_ids"].append(dids[s:e].tobytes())
-            rows["tfs"].append(tfs[s:e].tobytes())
-        yield pa.RecordBatch.from_pydict(
-            {
-                "shard": pa.array(rows["shard"], pa.int32()),
-                "bucket": pa.array(rows["bucket"], pa.int32()),
-                "salt": pa.array(rows["salt"], pa.int32()),
-                "term_lens": pa.array(rows["term_lens"], pa.binary()),
-                "term_data": pa.array(rows["term_data"], pa.binary()),
-                "doc_ids": pa.array(rows["doc_ids"], pa.binary()),
-                "tfs": pa.array(rows["tfs"], pa.binary()),
-            }
-        )
 
     return kernel
 
@@ -613,10 +387,12 @@ def make_tokenize_pack_kernel_arrow(
 def _make_unpack_encode_arrow(codec: str = "varint"):
     """applyInArrow kernel over (shard, bucket, salt) groups of PACKED
     rows: rebuild each row's term StringArray zero-copy from its
-    (term_lens, term_data) buffers, concatenate the group's pairs, and
-    encode via the same :func:`_encode_term_arrays` body as the pair-row
-    path — identical output rows by construction."""
+    (term_lens, term_data) buffers, concatenate the group's pairs (one
+    packed row per map-side input batch), sort them by (term, doc_id) and
+    encode every term -> per-term rows, term-ascending.  The sort makes
+    the output independent of how the pack kernel split the group."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     def _encode(table):
         shard = table.column("shard")[0].as_py()
@@ -642,10 +418,38 @@ def _make_unpack_encode_arrow(codec: str = "varint"):
                 np.frombuffer(di_col[i].as_py(), dtype=np.int64)
             )
             tf_parts.append(np.frombuffer(tf_col[i].as_py(), dtype=np.int32))
-        terms = pa.concat_arrays(t_arrays)
         doc_ids = np.concatenate(did_parts).astype(np.uint64)
         tfs = np.concatenate(tf_parts).astype(np.uint64)
-        return _encode_term_arrays(shard, salt, terms, doc_ids, tfs, codec)
+        denc = pc.dictionary_encode(pa.concat_arrays(t_arrays))
+        codes = denc.indices.to_numpy().astype(np.int64)
+        dic = denc.dictionary
+        # rank codes under lexicographic term order
+        sorter = pc.array_sort_indices(dic).to_numpy().astype(np.int64)
+        rank = np.empty(len(dic), dtype=np.int64)
+        rank[sorter] = np.arange(len(dic))
+        ranked = rank[codes]
+        order = np.lexsort((doc_ids, ranked))
+        ranked, doc_ids, tfs = ranked[order], doc_ids[order], tfs[order]
+        change = np.flatnonzero(
+            np.concatenate(([True], ranked[1:] != ranked[:-1]))
+        )
+        bounds = np.concatenate((change, [len(ranked)]))
+        out_post, out_nb = encode_postings_group(doc_ids, tfs, bounds,
+                                                 codec=codec)
+        n_out = len(change)
+        return pa.table(
+            {
+                "shard": pa.array(np.full(n_out, shard, np.int32), pa.int32()),
+                "term": pc.take(dic, pa.array(sorter[ranked[change]])),
+                "salt": pa.array(np.full(n_out, salt, np.int32), pa.int32()),
+                "n_postings": pa.array(np.diff(bounds), pa.int64()),
+                "cf_local": pa.array(
+                    np.add.reduceat(tfs, change).astype(np.int64), pa.int64()
+                ),
+                "n_blocks": pa.array(out_nb.astype(np.int32), pa.int32()),
+                "postings": pa.array(list(out_post), type=pa.binary()),
+            }
+        )
 
     return _encode
 
@@ -845,8 +649,6 @@ def build_index(
     verify_sha: bool = True,
     persist_input: bool = True,
     pre_assigned: bool = False,
-    pre_tokenized: DataFrame | None = None,
-    pairs_storage: str = "none",
     postings_codec: str = "pfor",
 ) -> dict:
     """Build (or resume) the full index. Returns build metrics dict.
@@ -867,39 +669,29 @@ def build_index(
     Pass structure (minimal — each pass over the corpus is a real cost at
     10^12 docs):
       1. range shuffle for doc_id assignment (+ range-sampling scan),
-      2. ONE tokenize pass (mapInPandas, persisted): flat (doc_id, term, tf)
-         pairs + a per-doc NULL-term sentinel carrying doc_len — doc lengths
-         never need their own shuffle,
-      3. doc_meta scan: metadata + sha256 invariant column computed in the
-         same projection (no separate verification pass); doc_len joined
-         from the sentinel rows (tiny join, no content),
-      4. hot-term salt plan from a SAMPLE of the cached pairs (salting is
-         performance-only; salted==unsalted is property-tested),
-      5. the big shuffle + write: salted (shard, term_bucket, salt) encode
-         -> hot-term merge -> shard layout -> parquet, ONE job
+      2. doc_meta scan: metadata + sha256 invariant column + doc_len
+         (:func:`_make_doc_len_col`: a JVM regexp_count in standard mode, a
+         pandas UDF over the analyzer in porter mode) in ONE projection —
+         no separate verification pass, no doc_len shuffle,
+      3. one tiny agg over the written doc_meta: num_docs, avgdl, sha check,
+      4. the big shuffle + write, ONE job: the pack kernel tokenizes and
+         emits packed (shard, term_bucket, salt) rows (hot-term salting
+         decided in the kernel, no sample pass) -> unpack + encode ->
+         shard shuffle -> inline salted-run merge -> parquet
          (dynamic-overwriting only the resume groups still todo;
-         group=g/shard=k layout unchanged),
-      6. EXACT global term_stats (df = Σ per-shard posting counts, cf = Σ
+         group=g/shard=k layout unchanged).  The tokenized pairs are never
+         materialized: a pairs relation is ~10x the corpus,
+      5. EXACT global term_stats (df = Σ per-shard posting counts, cf = Σ
          per-shard tf sums) aggregated from the WRITTEN postings with
          column pruning — a terms-level read replacing v1's full
          groupBy(term) shuffle over every pair.  Postings rows carry only
          per-shard partials (format v2): query-time idf reads the term
-         dictionary, the Lucene term-metadata/posting-data split.
+         dictionary, the Lucene term-metadata/posting-data split,
+      6. norms: per-shard doc_len chunks from the written doc_meta.
 
-    ``pairs_storage`` — how the tokenized (doc_id, term, tf) relation is
-    held between pass 2 and pass 5:
-      * "none" (default, standard mode): NOT held at all — the tokenizer
-        streams straight into the salted encode shuffle (one fused stage),
-        doc_len comes from a pure-JVM expression in the doc_meta scan, and
-        the salt plan tokenizes a Bernoulli doc sample.  Byte-identical
-        output (property-tested) with no pairs-sized materialization —
-        the 100 TB shape, and measurably better multi-executor scaling
-        (the cache builders were the build's dominant page-allocator load).
-      * "disk_only": UnsafeRow-serialized executor-local spill.
-      * "memory_and_disk": Spark's columnar in-memory cache (v1 behavior;
-        pays a row-at-a-time column builder per pair).
-    Porter mode always materializes (its stopword-filtered doc_len needs
-    the Python kernel's sentinel rows).
+    ``pre_assigned``: ``corpus`` already carries ``doc_id`` (the caller
+    ran :func:`assign_doc_ids`, e.g. the multifield build sharing one
+    assignment across its field sub-indexes).
     """
     t0 = time.time()
     stage_sec: dict[str, float] = {}
@@ -931,92 +723,15 @@ def build_index(
         docs = assign_doc_ids(corpus, persist_output=persist_input)
     t_cur = _tick("assign_doc_ids", t_cur)
 
-    # -- ONE tokenize pass: pairs + doc_len sentinels, persisted ------------
-    # (``pre_tokenized``: the caller already produced — and persisted — the
-    # (doc_id, term, tf) + NULL-term-sentinel relation, e.g. the multifield
-    # build's single fused tokenize scan shared across field sub-indexes.)
-    own_tokenize = pre_tokenized is None
-    if own_tokenize:
-        kernel_schema = "doc_id long, term string, tf int"
-        # pairs cache level: "disk_only" serializes UnsafeRows to executor-
-        # local disk; "memory_and_disk" builds Spark's columnar in-memory
-        # cache.  The columnar path pays a row-at-a-time
-        # CompressibleColumnBuilder.appendFrom per pair (jstack-profiled:
-        # the dominant JVM cost of the tokenize stage, and the per-row
-        # allocation churn contends across executors sharing a socket —
-        # multi-executor cells measured the stage's task CPU inflating
-        # ~4x at 4 one-core executors).  DISK_ONLY streams the rows out
-        # with the cheap UnsafeRow serializer; both downstream consumers
-        # (salt-plan sample, salted encode) read it sequentially once, and
-        # at 100 TB a pairs relation would never fit a memory cache anyway.
-        fuse = pairs_storage == "none" and mode == "standard"
-        if fuse:
-            # "none": NO pairs materialization anywhere.  The tokenize
-            # kernel streams straight into the encode shuffle's map side
-            # (ONE fused stage: scan -> doc_id join -> tokenize -> salted
-            # repartition write), doc_len comes from the pure-JVM
-            # _make_doc_len_col expression inside the doc_meta scan (it
-            # matches the kernel token count exactly — property-tested),
-            # and the salt plan estimates df from a tokenized CORPUS
-            # sample instead of a pairs-cache sample.  This is the
-            # 100 TB shape: a pairs relation is ~10x the corpus and
-            # restreaming one extra tokenize of a 0.1% sample beats
-            # materializing it (measured here: the pairs cache write was
-            # the build's largest page-allocator load, and kernel-side
-            # page zeroing is what contends across co-located executors).
-            # Porter mode keeps the sentinel path: its doc_len (stopword-
-            # filtered) needs the Python kernel anyway.
-            tokenized = docs.select("doc_id", "content").mapInArrow(
-                make_tokenize_pairs_kernel_arrow(mode, emit_doc_len=False),
-                kernel_schema,
-            )
-            pairs = tokenized
-            doc_len_df = None
-        else:
-            pairs_level = (
-                StorageLevel.DISK_ONLY
-                if pairs_storage == "disk_only"
-                else StorageLevel.MEMORY_AND_DISK
-            )
-            tokenized = (
-                docs.select("doc_id", "content")
-                .mapInArrow(
-                    make_tokenize_pairs_kernel_arrow(mode, emit_doc_len=True),
-                    kernel_schema,
-                )
-                .persist(pairs_level)
-            )
-            tokenized.count()  # materialize the tokenize persist once
-            pairs = tokenized.where(F.col("term").isNotNull())
-            doc_len_df = tokenized.where(F.col("term").isNull()).select(
-                "doc_id", F.col("tf").alias("doc_len")
-            )
-    else:
-        tokenized = pre_tokenized
-        fuse = False
-        pairs = tokenized.where(F.col("term").isNotNull())
-        doc_len_df = tokenized.where(F.col("term").isNull()).select(
-            "doc_id", F.col("tf").alias("doc_len")
-        )
-    t_cur = _tick("tokenize", t_cur)
-
-    _released = []
-
     def _release_caches() -> None:
-        """Drop the assigned-join / ranged-keys / pairs caches (idempotent)
-        — called as soon as every remaining stage reads only written
-        parquet.  (The raw corpus is never persisted — see the note at
-        build start.)"""
-        if _released:
-            return
-        _released.append(True)
-        if own_tokenize and not fuse:
-            tokenized.unpersist()
+        """Drop the assigned-join / ranged-keys caches (unpersist is
+        idempotent) — called as soon as every remaining stage reads only
+        written parquet.  (The raw corpus is never persisted — see the
+        note at build start.)"""
         if hasattr(docs, "_ctse_persisted"):
             docs._ctse_persisted.unpersist()
 
-    # -- doc_meta: metadata + sha256 invariant in one scan; doc_len joined
-    # from the cached sentinel rows (no content, no pair-level shuffle) ----
+    # -- doc_meta: metadata + sha256 invariant + doc_len in one scan ------
     meta_cols = ["doc_id", "repo", "path", "commit", "lang"] + (
         ["content_sha256"] if "content_sha256" in corpus.columns else []
     )
@@ -1029,21 +744,11 @@ def build_index(
             if has_sha
             else F.lit(True)
         ).alias("sha_ok")
-        if doc_len_df is None:
-            # fused path: doc_len is the pure-JVM token-count expression,
-            # computed inside the same content scan as the sha — no
-            # sentinel join, no second content pass
-            dm = docs.select(
-                *meta_cols,
-                sha_col,
-                F.coalesce(_make_doc_len_col(mode), F.lit(0)).alias(
-                    "doc_len"
-                ),
-            )
-        else:
-            dm = docs.select(*meta_cols, sha_col).join(
-                doc_len_df, "doc_id", "left"
-            ).withColumn("doc_len", F.coalesce("doc_len", F.lit(0)))
+        dm = docs.select(
+            *meta_cols,
+            sha_col,
+            F.coalesce(_make_doc_len_col(mode), F.lit(0)).alias("doc_len"),
+        )
         dm.write.mode("overwrite").parquet(seg.path_of(index_dir, seg.DOC_META))
         # sha_ok flag on THIS row records whether the persisted sha_ok column
         # was actually computed (vs the verify_sha=False lit(True)
@@ -1151,85 +856,37 @@ def build_index(
 
     if todo or need_term_stats:
         stats_src: DataFrame | None = None  # shared written-postings scan
-        # -- hot-term salt plan (explicit + logged, SURVEY.md §4.2) from a
-        # SAMPLE of the pairs.  Salting is performance-only (salted ==
-        # unsalted byte-identically, property-tested), so estimated df is
-        # enough — this replaces round-1's full groupBy(term) pre-pass over
-        # every pair (a whole extra shuffle of the corpus-sized relation).
-        # Exact df/cf now fall out of the encode output below (B5 unchanged).
-        if fuse:
-            # packed path (round 6): salting is decided inside the pack
-            # kernel from per-batch local density (see
-            # make_tokenize_pack_kernel_arrow) — no driver pre-pass, no
-            # sample job.  The merge kernel reconciles arbitrary runs
-            # byte-identically, so per-batch disagreement is free.
-            hot_df = None
-            seg.metrics_append(
-                spark, index_dir,
-                [("salt_plan", 0, "in_kernel", 1.0)],
-            )
-        else:
-            frac = min(1.0, 1000.0 / max(hot_df_threshold, 1))
-            sampled = pairs if frac >= 1.0 else pairs.sample(
-                fraction=frac, seed=42
-            )
-            hot_rows = (
-                sampled.groupBy("term")
-                .agg((F.count("*") / F.lit(frac)).alias("df_est"))
-                .where(F.col("df_est") > hot_df_threshold)
-                .select(
-                    "term",
-                    F.least(
-                        F.lit(max_salts),
-                        F.ceil(
-                            F.col("df_est") / F.lit(hot_df_threshold)
-                        ).cast("int"),
-                    ).alias("n_salts"),
-                )
-                .collect()
-            )
-            hot_df = spark.createDataFrame(
-                [(r["term"], r["n_salts"]) for r in hot_rows] or [("", 1)],
-                "term string, n_salts int",
-            )
-            seg.metrics_append(
-                spark, index_dir,
-                [("salt_plan", 0, "hot_terms", float(len(hot_rows)))],
-            )
+        # -- hot-term salting (SURVEY.md §4.2) is decided inside the pack
+        # kernel from per-batch local density (see
+        # make_tokenize_pack_kernel_arrow) — no planning pre-pass, no
+        # sample job.  The merge kernel reconciles arbitrary runs
+        # byte-identically, so per-batch disagreement is free.  Exact
+        # df/cf fall out of the encode output below (B5).
+        seg.metrics_append(
+            spark, index_dir, [("salt_plan", 0, "in_kernel", 1.0)]
+        )
         t_cur = _tick("salt_plan", t_cur)
 
-        # -- THE shuffle: cached pairs -> salted (shard, term_bucket, salt)
-        # encode --
+        # -- THE shuffle: PACKED (shard, term_bucket, salt) encode --
+        # The pack kernel tokenizes, keys every pair and emits ONE row per
+        # group per input batch (flat term/doc/tf buffers) instead of one
+        # row per pair.  Same shuffled bytes, ~500x fewer rows: the per-row
+        # UnsafeRow serialize/deserialize, the reduce-side sort of every
+        # pair, and the per-pair Arrow conversion — measured as ~5/6 of the
+        # two shuffle stages' 900 task-seconds, vs ~145 task-seconds of
+        # actual tokenize+encode python — collapse to per-group costs.
         # (A map-side SPIMI-style combiner — encode per-partition runs
-        # BEFORE the exchange, shuffle compact runs instead of raw pairs —
-        # was A/B-measured here and REJECTED: it cuts shuffle bytes ~5x,
-        # but it turns every term into a multi-run merge at the write
-        # pass, so the merge kernel's per-run Python path runs for ~150k
-        # terms x ~25 runs instead of only rare salted hot terms;
-        # postings_write went 56s -> 105s at 1 executor.  Shuffling raw
-        # pairs keeps the merge's zero-copy single-run fast path for
-        # 99.9% of terms.)
-        salted = None if fuse else (
-            pairs.join(F.broadcast(hot_df), "term", "left")
-            .withColumn("n_salts", F.coalesce("n_salts", F.lit(1)))
-            .withColumn("shard", (F.col("doc_id") / shard_size).cast("int"))
-            .withColumn(
-                "salt",
-                (
-                    (F.col("doc_id") % shard_size) * F.col("n_salts") / shard_size
-                ).cast("int"),
-            )
-            .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(term_buckets)))
-        )
+        # BEFORE the exchange — was A/B-measured here and REJECTED: it cuts
+        # shuffle bytes ~5x, but it turns every term into a multi-run merge
+        # at the write pass, so the merge kernel's per-run Python path runs
+        # for ~150k terms x ~25 runs instead of only rare salted hot terms;
+        # postings_write went 56s -> 105s at 1 executor.)
         enc_schema = (
             "shard int, term string, salt int, n_postings long, "
             "cf_local long, n_blocks int, postings binary"
         )
         # No persist: the encode output streams straight into the shard
-        # shuffle below — its ONLY consumer — so the old DISK_ONLY persist
-        # (which existed because the hot/cold branch split read it twice)
-        # would now be a pure extra disk round-trip of the whole postings
-        # relation.
+        # shuffle below — its ONLY consumer.
         # EXPLICIT fine-grained partitioning for the encode shuffle: a bare
         # groupBy leaves the partition count to AQE, whose parallelism-first
         # coalescing targets ~total-core-count tasks (measured: 5 tasks of
@@ -1242,49 +899,27 @@ def build_index(
         n_encode_parts = max(
             32, 4 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
         )
-        if fuse:
-            # PACKED encode shuffle (round 6): the tokenize kernel assigns
-            # (shard, bucket, salt) itself and emits ONE row per group per
-            # map task (flat term/doc/tf buffers) instead of one row per
-            # pair.  Same shuffled bytes, ~500x fewer rows: the per-row
-            # UnsafeRow serialize/deserialize, the reduce-side sort of
-            # every pair, and the per-pair Arrow conversion — measured as
-            # ~5/6 of the two shuffle stages' 900 task-seconds, vs ~145
-            # task-seconds of actual tokenize+encode python — collapse to
-            # per-group costs.  Output rows are byte-identical: the
-            # unpack kernel feeds the same _encode_term_arrays body.
-            packed = docs.select("doc_id", "content").mapInArrow(
-                make_tokenize_pack_kernel_arrow(
-                    mode, shard_size, term_buckets,
-                    int(num_docs), hot_df_threshold, max_salts,
-                ),
-                _PACK_SCHEMA,
+        packed = docs.select("doc_id", "content").mapInArrow(
+            make_tokenize_pack_kernel_arrow(
+                mode, shard_size, term_buckets,
+                int(num_docs), hot_df_threshold, max_salts,
+            ),
+            _PACK_SCHEMA,
+        )
+        encoded = (
+            packed.repartition(n_encode_parts, "shard", "bucket", "salt")
+            .groupBy("shard", "bucket", "salt")
+            .applyInArrow(
+                _make_unpack_encode_arrow(postings_codec), enc_schema
             )
-            encoded = (
-                packed.repartition(
-                    n_encode_parts, "shard", "bucket", "salt"
-                )
-                .groupBy("shard", "bucket", "salt")
-                .applyInArrow(
-                    _make_unpack_encode_arrow(postings_codec), enc_schema
-                )
-            )
-        else:
-            encoded = (
-                salted.repartition(n_encode_parts, "shard", "bucket", "salt")
-                .groupBy("shard", "bucket", "salt")
-                .applyInArrow(
-                    _make_encode_bucket_group_arrow(postings_codec),
-                    enc_schema,
-                )
-            )
+        )
 
         merge_schema = (
             "shard int, term string, n_postings long, cf_local long, "
             "n_blocks int, postings binary"
         )
         if todo:
-            # -- postings: ONE job end-to-end (pairs -> salted encode ->
+            # -- postings: ONE job end-to-end (pack -> salted encode ->
             # shard shuffle -> sorted inline salted-run merge -> parquet),
             # dynamic-overwriting only todo groups (resume granularity:
             # group=g/shard=k).  The (shard, term, salt) sort makes salted
@@ -1359,8 +994,8 @@ def build_index(
         t_cur = _tick("postings_write", t_cur)
 
         # -- release the build caches NOW: everything below reads only the
-        # WRITTEN parquet (postings, doc_meta), and the corpus + ranged +
-        # 48M-row pairs caches otherwise sit on the executor heaps through
+        # WRITTEN parquet (postings, doc_meta), and the assigned-corpus +
+        # ranged-keys caches otherwise sit on the executor heaps through
         # the tail stages — measured as GC-dominated (12.8s GC on a 16.4s
         # stage) on 14g executors at 200k docs.
         _release_caches()

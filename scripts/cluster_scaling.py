@@ -290,10 +290,8 @@ def run_cell(n_execs: int, n_docs: int) -> dict | None:
         "--index-dir", index_dir,
         "--shard-size", "50000",
         "--hot-df-threshold", str(max(1000, n_docs // 10)),
-        # cluster shape: no input cache (re-scan beats caching content) and
-        # the fused zero-materialization tokenize->encode pipeline
+        # cluster shape: no input cache (re-scan beats caching content)
         "--no-persist-input",
-        "--pairs-storage", "none",
     ])
     t0 = time.time()
     out = subprocess.run(cmd, capture_output=True, text=True,
@@ -543,10 +541,6 @@ def _save_qcells(cells: dict) -> None:
     os.makedirs(os.path.dirname(QHIST), exist_ok=True)
     with open(QHIST, "w") as f:
         json.dump(cells, f, indent=1)
-
-
-# kept as an alias: older harvest scripts import max_merge_query
-max_merge_query = merge_query
 
 
 def query_report() -> dict | None:

@@ -14,12 +14,14 @@ from __future__ import annotations
 import math
 from collections import Counter
 
+import numpy as np
 import pandas as pd
 
 from clinical_trial_searchengine_spark.functions.analysis import (
     analyze_batch,
     tokenize_text,
 )
+from clinical_trial_searchengine_spark.functions.codec import encode_postings
 
 
 class BM25Oracle:
@@ -90,3 +92,33 @@ class BM25Oracle:
                 scores[doc_id] = scores.get(doc_id, 0.0) + w * (tf / (tf + Kd))
         ranked = sorted(scores.items(), key=lambda e: (-e[1], e[0]))
         return ranked[:k]
+
+
+def expected_postings(
+    oracle: BM25Oracle, shard_size: int, codec: str = "pfor"
+) -> dict:
+    """{(shard, term): (n_postings, cf, n_blocks, postings bytes)} — each
+    (shard, term) posting list of the oracle encoded on its own with
+    ``codec.encode_postings``: the independent reference the build's
+    tokenize -> pack -> encode -> merge path must reproduce byte for
+    byte, whatever its salting or batch split."""
+    out = {}
+    for term, plist in oracle.postings.items():
+        ids = np.asarray([d for d, _ in plist], dtype=np.uint64)
+        tfs = np.asarray([t for _, t in plist], dtype=np.uint64)
+        shards = ids // shard_size
+        for shard in np.unique(shards):
+            m = shards == shard
+            buf, n_blocks = encode_postings(ids[m], tfs[m], codec=codec)
+            out[(int(shard), term)] = (
+                int(m.sum()), int(tfs[m].sum()), int(n_blocks), buf
+            )
+    return out
+
+
+def expected_term_stats(oracle: BM25Oracle) -> dict:
+    """{term: (df, cf)} over the whole corpus."""
+    return {
+        term: (len(plist), sum(tf for _, tf in plist))
+        for term, plist in oracle.postings.items()
+    }

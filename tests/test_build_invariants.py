@@ -265,56 +265,98 @@ def test_sha_failure_then_fixed_corpus_resumes_clean(
     assert dm.where(~F.col("sha_ok")).count() == 0
 
 
-def test_fused_build_identical_to_classic(spark, small_corpus_df, tmp_path):
-    """pairs_storage='none' (tokenize fused straight into the encode
-    shuffle, doc_len from the JVM expression, salt plan from a doc sample)
-    must produce byte-identical index artifacts to the classic
-    materialized-pairs build — postings payloads included."""
-    from clinical_trial_searchengine_spark.engine import SearchEngine
+@pytest.mark.parametrize(
+    "mode,hot_df_threshold,max_records_per_batch",
+    [
+        ("standard", 40, None),
+        ("standard", 10**9, None),
+        ("porter", 40, None),
+        ("porter", 10**9, None),
+        ("standard", 40, 7),
+    ],
+    ids=["standard-salted", "standard-unsalted", "porter-salted",
+         "porter-unsalted", "standard-salted-batch7"],
+)
+def test_build_matches_oracle(
+    spark, small_corpus_df, small_corpus_pdf, tmp_path,
+    mode, hot_df_threshold, max_records_per_batch,
+):
+    """Every build artifact equals the single-node oracle: postings bytes,
+    n_postings/cf_local and n_blocks per (shard, term) == that list
+    encoded on its own; term_stats df/cf; doc_meta doc_len and norms ==
+    the oracle's doc lengths.  Covers both analyzer modes, salted and
+    unsalted, and Arrow batches of 7 rows (every pack-kernel batch its own
+    packed flush, and nearly every term salted)."""
+    import numpy as np
 
-    outs = {}
-    for name, ps in [("classic", "memory_and_disk"), ("fused", "none")]:
-        d = str(tmp_path / name)
+    from tests.oracle import (
+        BM25Oracle,
+        expected_postings,
+        expected_term_stats,
+    )
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    if max_records_per_batch is not None:
+        spark.conf.set(conf, str(max_records_per_batch))
+    d = str(tmp_path / "idx")
+    try:
         SearchEngine(spark, d).build(
             small_corpus_df,
+            mode=mode,
             shard_size=48,
-            hot_df_threshold=40,
+            hot_df_threshold=hot_df_threshold,
             max_salts=4,
             n_resume_groups=2,
             norm_chunk=16,
-            pairs_storage=ps,
         )
-        outs[name] = d
+    finally:
+        spark.conf.set(conf, old)
+    oracle = BM25Oracle(small_corpus_pdf, mode=mode)
 
-    for sub, sort in [
-        (seg.DOC_META, ["doc_id"]),
-        (seg.TERM_STATS, ["term"]),
-        (seg.NORMS, ["shard", "chunk"]),
-        (seg.POSTINGS, ["group", "shard", "term"]),
-    ]:
-        a = (
-            spark.read.parquet(seg.path_of(outs["classic"], sub))
-            .toPandas().sort_values(sort).reset_index(drop=True)
+    rows = (
+        spark.read.parquet(seg.path_of(d, seg.POSTINGS))
+        .select("shard", "term", "n_postings", "cf_local", "n_blocks",
+                "postings")
+        .collect()
+    )
+    got = {
+        (r["shard"], r["term"]): (
+            r["n_postings"], r["cf_local"], r["n_blocks"], bytes(r["postings"])
         )
-        b = (
-            spark.read.parquet(seg.path_of(outs["fused"], sub))
-            .toPandas().sort_values(sort).reset_index(drop=True)
-        )
-        assert len(a) == len(b), sub
-        a, b = a[sorted(a.columns)], b[sorted(b.columns)]
-        assert list(a.columns) == list(b.columns), sub
-        for col in a.columns:
-            if a[col].dtype == object:
-                assert all(
-                    x == y for x, y in zip(a[col], b[col])
-                ), f"{sub}.{col}"
-            else:
-                assert a[col].equals(b[col]), f"{sub}.{col}"
+        for r in rows
+    }
+    assert len(got) == len(rows)  # one row per (shard, term)
+    assert got == expected_postings(oracle, 48)
+
+    ts = {
+        r["term"]: (r["df"], r["cf"])
+        for r in spark.read.parquet(seg.path_of(d, seg.TERM_STATS)).collect()
+    }
+    assert ts == expected_term_stats(oracle)
+
+    exp_len = [int(x) for x in oracle.doc_len]
+    dm = {
+        r["doc_id"]: r["doc_len"]
+        for r in spark.read.parquet(seg.path_of(d, seg.DOC_META))
+        .select("doc_id", "doc_len").collect()
+    }
+    assert dm == dict(enumerate(exp_len))
+    norms = sorted(
+        spark.read.parquet(seg.path_of(d, seg.NORMS)).collect(),
+        key=lambda r: r["first_doc_id"],
+    )
+    flat = []
+    for r in norms:
+        assert r["first_doc_id"] == len(flat)
+        flat.extend(np.frombuffer(r["doc_lens"], dtype="<i4").tolist())
+    assert flat == exp_len
+    shutil.rmtree(d)
 
 
 def test_doc_len_ignores_literal_control_chars(spark):
-    """The fused standard-mode doc_len expression must equal the
-    tokenizer's count even when content contains a literal \\x01 (the
+    """The doc_meta doc_len column must equal the tokenizer's count in
+    both analyzer modes, even when content contains a literal \\x01 (the
     marker char) — it is a separator to the analyzer, not a token."""
     from clinical_trial_searchengine_spark.functions.analysis import (
         analyze_batch,
@@ -331,10 +373,11 @@ def test_doc_len_ignores_literal_control_chars(spark):
         "a\x01b c\x01\x01d",       # interleaved
         "",
     ]
-    _, expected = analyze_batch(pd.Series(texts), "standard")
     df = spark.createDataFrame([(t,) for t in texts], "content string")
-    got = [r[0] for r in df.select(_make_doc_len_col("standard")).collect()]
-    assert got == list(expected)
+    for mode in ("standard", "porter"):
+        _, expected = analyze_batch(pd.Series(texts), mode)
+        got = [r[0] for r in df.select(_make_doc_len_col(mode)).collect()]
+        assert got == list(expected), mode
 
 
 def test_assign_doc_ids_null_keys_and_duplicate_guard(spark):

@@ -362,26 +362,42 @@ def test_search_many_per_query_filters_and_boosts(
 def test_multifield_build_tokenizes_once(
     spark, small_corpus_df, tmp_path_factory, monkeypatch
 ):
-    """The fused multifield build runs ONE tokenize scan for all fields:
-    no sub-build may fall back to its own make_tokenize_pairs_kernel pass."""
+    """Every build tokenizes through the packed path exactly once: one
+    make_tokenize_pack_kernel_arrow call (made while planning the build)
+    per standard build, per porter build, and per field of a multifield
+    build."""
+    from clinical_trial_searchengine_spark.engine import SearchEngine
     from clinical_trial_searchengine_spark.plans import build as build_mod
     from clinical_trial_searchengine_spark.plans.multifield import (
         build_multifield_index,
     )
 
-    def _forbidden(*a, **k):
-        raise AssertionError(
-            "per-field tokenize pass ran despite fused pre_tokenized input"
-        )
+    calls = []
+    real = build_mod.make_tokenize_pack_kernel_arrow
 
-    monkeypatch.setattr(build_mod, "make_tokenize_pairs_kernel", _forbidden)
-    d = str(tmp_path_factory.mktemp("mf_fused") / "idx")
-    out = build_multifield_index(
-        spark, small_corpus_df, d,
-        fields={"head": "substring(content, 1, 80)", "body": "content"},
-        shard_size=48,
+    def _counting(mode, *a, **k):
+        calls.append(mode)
+        return real(mode, *a, **k)
+
+    monkeypatch.setattr(
+        build_mod, "make_tokenize_pack_kernel_arrow", _counting
     )
-    assert out["num_docs"] > 0
+    root = tmp_path_factory.mktemp("tok_once")
+    corpus = small_corpus_df.limit(60)
+    for mode in ("standard", "porter"):
+        calls.clear()
+        SearchEngine(spark, str(root / mode)).build(
+            corpus, mode=mode, shard_size=48
+        )
+        assert calls == [mode]
+    calls.clear()
+    out = build_multifield_index(
+        spark, corpus, str(root / "mf"),
+        fields={"head": "substring(content, 1, 80)", "body": "content"},
+        mode="porter", shard_size=48,
+    )
+    assert out["num_docs"] == 60
+    assert calls == ["porter", "porter"]
 
 
 def test_search_many_fallback_is_one_job_not_a_search_loop(

@@ -153,48 +153,134 @@ def test_analyze_flat_arrow_sliced_input(texts):
     assert list(dl2) == list(dl)
 
 
-_groups = st.lists(
-    st.tuples(
-        st.sampled_from(["the", "def", "license", "trial", "a0", "z"]),
-        st.integers(min_value=0, max_value=10_000),  # doc_id
-        st.integers(min_value=1, max_value=50),  # tf
-    ),
+def _encode_via_kernels(batches, mode, shard_size, n_docs,
+                        hot_df_threshold, max_salts, term_buckets=3,
+                        codec="pfor"):
+    """Run the build's kernels in-process the way the Spark plan chains
+    them: pack kernel -> group by (shard, bucket, salt) -> unpack-encode
+    -> sort by (shard, term, salt) -> merge kernel.  Returns (number of
+    packed batches, {(shard, term): (n_postings, cf, n_blocks, bytes)})."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from clinical_trial_searchengine_spark.plans.build import (
+        _make_merge_runs_kernel,
+        _make_unpack_encode_arrow,
+        make_tokenize_pack_kernel_arrow,
+    )
+
+    pack = make_tokenize_pack_kernel_arrow(
+        mode, shard_size, term_buckets, n_docs, hot_df_threshold, max_salts
+    )
+    packed = list(pack(iter(batches)))
+    if not packed:
+        return 0, {}
+    table = pa.Table.from_batches(packed)
+    keys = sorted(set(zip(*(table.column(c).to_pylist()
+                            for c in ("shard", "bucket", "salt")))))
+    unpack = _make_unpack_encode_arrow(codec)
+    encoded = pa.concat_tables([
+        unpack(table.filter(
+            pc.and_(pc.and_(pc.equal(table["shard"], sh),
+                            pc.equal(table["bucket"], bu)),
+                    pc.equal(table["salt"], sa))
+        ))
+        for sh, bu, sa in keys
+    ]).sort_by([("shard", "ascending"), ("term", "ascending"),
+                ("salt", "ascending")])
+    merge = _make_merge_runs_kernel(codec)
+    out = {}
+    for b in merge(iter(encoded.to_batches())):
+        for r in b.to_pylist():
+            key = (r["shard"], r["term"])
+            assert key not in out, f"unmerged run for {key}"
+            out[key] = (r["n_postings"], r["cf_local"], r["n_blocks"],
+                        r["postings"])
+    return len(packed), out
+
+
+def _oracle_for(texts, mode):
+    from tests.oracle import BM25Oracle
+
+    # keys sort in list order, so oracle doc_id == position in ``texts``
+    return BM25Oracle(
+        pd.DataFrame({
+            "repo": "r",
+            "path": [f"{i:06d}" for i in range(len(texts))],
+            "commit": "c",
+            "content": texts,
+        }),
+        mode=mode,
+    )
+
+
+def _batches(texts, cuts):
+    import pyarrow as pa
+
+    bounds = [0, *sorted(set(c for c in cuts if 0 < c < len(texts))),
+              len(texts)]
+    return [
+        pa.RecordBatch.from_pydict({
+            "doc_id": pa.array(range(s, e), pa.int64()),
+            "content": pa.array(texts[s:e], pa.string()),
+        })
+        for s, e in zip(bounds[:-1], bounds[1:])
+    ]
+
+
+_docs = st.lists(
+    st.lists(
+        st.sampled_from(["the", "def", "license", "Trial", "running", "runs",
+                         "a0", "z", "and", "caf\u00e9"]),
+        max_size=12,
+    ).map(" ".join),
     min_size=1,
-    max_size=120,
-    unique_by=lambda t: (t[0], t[1]),
+    max_size=40,
 )
 
 
-@given(_groups)
+@given(
+    _docs,
+    st.lists(st.integers(min_value=1, max_value=39), max_size=4),
+    st.sampled_from(["standard", "porter"]),
+    st.integers(min_value=1, max_value=16),
+    st.integers(min_value=1, max_value=50),
+    st.integers(min_value=1, max_value=4),
+)
 @settings(**_SETTINGS)
-def test_encode_bucket_group_arrow_equals_pandas(rows):
-    """The applyInArrow encode kernel emits byte-identical postings rows in
-    the same order as the pandas kernel it replaced."""
-    import pyarrow as pa
+def test_pack_unpack_encode_equals_per_term_encode(
+    texts, cuts, mode, shard_size, hot_df_threshold, max_salts
+):
+    """pack kernel -> unpack-encode -> merge over ANY batch split and
+    salting == each (shard, term) posting list encoded on its own from the
+    single-node oracle."""
+    from tests.oracle import expected_postings
 
-    from clinical_trial_searchengine_spark.plans.build import (
-        _encode_bucket_group,
-        _encode_bucket_group_arrow,
+    _, got = _encode_via_kernels(
+        _batches(texts, cuts), mode, shard_size, len(texts),
+        hot_df_threshold, max_salts,
     )
+    assert got == expected_postings(_oracle_for(texts, mode), shard_size)
 
-    pdf = pd.DataFrame(
-        {
-            "shard": np.full(len(rows), 3, dtype=np.int32),
-            "bucket": np.full(len(rows), 7, dtype=np.int64),
-            "salt": np.full(len(rows), 2, dtype=np.int32),
-            "term": [r[0] for r in rows],
-            "doc_id": np.asarray([r[1] for r in rows], dtype=np.int64),
-            "tf": np.asarray([r[2] for r in rows], dtype=np.int32),
-        }
-    )
-    ref = _encode_bucket_group(pdf)
-    got = _encode_bucket_group_arrow(pa.Table.from_pandas(pdf)).to_pandas()
-    assert list(got.columns) == list(ref.columns)
-    assert len(got) == len(ref)
-    for col in ref.columns:
-        a = [bytes(x) if col == "postings" else x for x in got[col]]
-        b = [bytes(x) if col == "postings" else x for x in ref[col]]
-        assert a == b, col
+
+def test_pack_kernel_flushes_per_batch(small_corpus_pdf):
+    """The pack kernel yields one packed batch per input batch (worker
+    memory bounded by the batch, not the partition); the encoded postings
+    equal the single-batch run's and the oracle's, salted or not."""
+    from tests.oracle import expected_postings
+
+    texts = small_corpus_pdf.sort_values(
+        ["repo", "path", "commit"])["content"].tolist()
+    n = len(texts)
+    for hot in (10, 10**9):
+        args = ("standard", 48, n, hot, 4)
+        n_one, one = _encode_via_kernels(_batches(texts, []), *args)
+        n_three, three = _encode_via_kernels(
+            _batches(texts, [n // 3, 2 * n // 3]), *args
+        )
+        assert (n_one, n_three) == (1, 3)
+        assert three == one
+        assert one == expected_postings(_oracle_for(texts, "standard"), 48)
 
 
 @given(st.text(max_size=300))
